@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.functions.{Agg, Hash60, Num}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deduplication suite for large-scale training-data pipelines.
   *
@@ -680,52 +682,78 @@ object Dedup {
   }
 
   /** id, cluster_id — connected components over an undirected pair list by
-    * iterative min-label propagation: each round every node takes the min of
-    * its own and its neighbors' labels; fixpoint = every component labeled
-    * with its smallest member. Rounds needed = graph diameter; near-dup
-    * graphs are dense blobs with tiny diameters, so this converges in a few
-    * rounds (for pathological chain shapes use [[connectedComponentsStar]],
-    * which converges in O(log n) rounds at the same per-round join cost).
-    * Each round is one equi-join + groupBy per direction; the per-round
-    * fixpoint check is a limit(1) existence probe, not a full count. */
+    * min-label propagation: each round every node takes the min of its own
+    * and its neighbours' labels; fixpoint = every component labelled with its
+    * smallest member. Rounds needed = graph diameter; near-dup graphs are
+    * dense blobs with tiny diameters, so this converges in a few rounds (for
+    * pathological chain shapes use [[connectedComponentsStar]], which
+    * converges in O(log n) rounds).
+    *
+    * The rounds run on co-partitioned RDDs, not as Dataset queries, so the
+    * loop plans no query per round and needs no separate fixpoint probe:
+    *  - build: both directions of every pair, grouped by node into an
+    *    adjacency list hash-partitioned over `spark.sql.shuffle.partitions`.
+    *    Each node's first label is the min of itself and its neighbours, so
+    *    the build is round 1;
+    *  - each round: the adjacency joins the labels under the same
+    *    partitioner (narrow), and only nodes whose label dropped in the
+    *    previous round send it to their neighbours. `reduceByKey(min)` is
+    *    the round's one shuffle; the left join back onto the labels is
+    *    narrow. An accumulator counts the dropped labels in that same job,
+    *    read only as "> 0", so a round is one Spark job;
+    *  - each superseded label table is unpersisted as soon as the next one
+    *    is materialized, the adjacency after the last round.
+    * Ids are non-null bigints.
+    * Throws when round `maxIterations` still dropped a label: a truncated
+    * propagation is not a labelling by component. */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
-    val fwd = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val edges = graft.infra.Caches.managed(
-      fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct())
-    // localCheckpoint, not persist: persist caches data but keeps the full
-    // lineage, so each round's plan would embed the previous round's twice
-    // (once in next, once in the change probe) — exponential plan growth.
-    // Checkpointing truncates lineage per round, the standard shape for
-    // iterative graph algorithms (a cluster deployment with lineage-based
-    // recovery needs would use reliable checkpoint() to a checkpoint dir).
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    var iter = 0
-    var changed = true
-    // labels only ever decrease, so Σlabel strictly decreases iff any node
-    // changed — the fixpoint probe is a one-row aggregate over the (already
-    // checkpointed) label table, not a join
-    // coalesce: sum over zero rows is null — an empty edge list must read
-    // as fixpoint-at-zero, not NPE
-    def sumLabels(df: DataFrame): Long =
-      df.agg(coalesce(sum("label"), lit(0L))).head.getLong(0)
-    var labelSum = sumLabels(labels)
-    while (changed && iter < maxIterations) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label").as("nl")), "dst")
-        .groupBy("src").agg(min(col("nl")).as("nbr_min"))
-      val next = labels
-        .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
+    val spark = pairs.sparkSession
+    require(Seq("doc_a", "doc_b").forall(c => pairs.schema(c).dataType == LongType),
+      s"connectedComponents needs bigint doc_a, doc_b; got ${pairs.schema.simpleString}")
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    // localCheckpoint, the iterative operators' cache: each round's labels
+    // are computed once, kept, and cut from the previous round's lineage
+    val adjacency = pairs.select(col("doc_a"), col("doc_b"))
+      .rdd.flatMap { r => val a = r.getLong(0); val b = r.getLong(1); Iterator(a -> b, b -> a) }
+      .groupByKey(part)
+      .mapPartitions(_.map { case (id, ns) => id -> ns.iterator.filter(_ != id).toArray.distinct },
+        preservesPartitioning = true)
+      .localCheckpoint()
+    // labels that dropped in the current round; read only as "> 0"
+    val dropped = spark.sparkContext.longAccumulator
+    var labels = adjacency.mapPartitions(_.map { case (id, ns) =>
+        val l = ns.foldLeft(id)(math.min)
+        if (l < id) dropped.add(1)
+        id -> (l, l < id)
+      }, preservesPartitioning = true)
+      .localCheckpoint()
+    labels.count()
+    var round = 1
+    while (dropped.value > 0 && round < maxIterations) {
+      dropped.reset()
+      val nbrMin = adjacency.join(labels.filter { case (_, (_, fresh)) => fresh }, part)
+        .flatMap { case (_, (ns, (l, _))) => ns.iterator.map(_ -> l) }
+        .reduceByKey(part, math.min(_, _))
+      val next = labels.leftOuterJoin(nbrMin, part)
+        .mapValues {
+          case ((l, _), Some(m)) if m < l => dropped.add(1); (m, true)
+          case ((l, _), _) => (l, false)
+        }
         .localCheckpoint()
-      val nextSum = sumLabels(next)
-      changed = nextSum != labelSum
-      labelSum = nextSum
+      next.count()
+      labels.unpersist(blocking = false)
       labels = next
-      iter += 1
+      round += 1
     }
-    labels.select(col("id"), col("label").as("cluster_id"))
+    adjacency.unpersist(blocking = false)
+    if (dropped.value > 0) {
+      labels.unpersist(blocking = false)
+      throw new IllegalStateException(s"connectedComponents: labels still changed in round " +
+        s"$maxIterations, the cap (maxIterations = $maxIterations): no fixpoint; raise " +
+        "maxIterations or use connectedComponentsStar")
+    }
+    import spark.implicits._
+    labels.map { case (id, (l, _)) => (id, l) }.toDF("id", "cluster_id")
   }
 
   /** id, cluster_id — connected components by ALTERNATING LARGE-STAR /
@@ -793,6 +821,9 @@ object Dedup {
       edges = next
       iter += 1
     }
+    if (!converged)
+      throw new IllegalStateException(s"connectedComponentsStar: edges still changed in round " +
+        s"$maxIterations, the cap (maxIterations = $maxIterations): no fixpoint")
     // stars point child -> root; roots and isolated nodes label themselves
     val out = ids
       .join(edges.select(col("src").as("id"), col("dst").as("root")), Seq("id"), "left")
@@ -818,8 +849,8 @@ object Dedup {
 
   /** [[clusters]] through a table STAGED once per (process, corpus,
     * threshold): the connected-components fixpoint is the expensive stage
-    * of the near-dup path (iterative joins; localCheckpoint truncates
-    * lineage but also breaks CacheManager plan-matching, so nothing shares
+    * of the near-dup path (every call runs the n-gram Jaccard confirm and
+    * then its RDD rounds eagerly, one Spark job each, so nothing shares
     * across queries), and every consumer of the labels —
     * keep-best/soft-weight/size-stats and any future one — was re-running
     * it from scratch (VERDICT r9 "what's wrong" #3: ~4 recomputations per

@@ -136,11 +136,13 @@ object KnowledgeGraph {
     * direct subclass edges). Spark has no recursive CTE; the idiomatic
     * formulation is a driver loop of join+union+distinct, O(depth)
     * iterations. At 100 TB each iteration is one shuffle and intermediate
-    * results should be checkpointed every few rounds to cut lineage. */
+    * results should be checkpointed every few rounds to cut lineage.
+    * Throws when round `maxIterations` still added rows: a truncated
+    * closure is missing ancestors. */
   def transitiveClosure(edges: DataFrame, maxIterations: Int = 20): DataFrame = {
-    // localCheckpoint truncates lineage per round (persist alone would let
-    // the plan double every iteration on deep graphs — see
-    // Dedup.connectedComponents for the same pattern)
+    // localCheckpoint truncates lineage per round: persist alone keeps the
+    // full lineage, so each round's plan would embed the previous round's
+    // and the plan would grow with every iteration on deep graphs
     var closure = edges.select(col("child"), col("parent")).distinct().localCheckpoint()
     var n = closure.count()
     var grew = true
@@ -156,6 +158,9 @@ object KnowledgeGraph {
       closure = next
       iter += 1
     }
+    if (grew)
+      throw new IllegalStateException(s"transitiveClosure: closure still grew in round " +
+        s"$maxIterations, the cap (maxIterations = $maxIterations): no fixpoint")
     closure
   }
 
@@ -246,12 +251,12 @@ object KnowledgeGraph {
     * final display division.
     *
     * Scale shape: the edge list materializes once (localCheckpoint — also
-    * truncates lineage so the plan doesn't double per round, cf.
-    * Dedup.connectedComponents); each round is ONE equi-join of the edge
-    * list against the (small) rank table plus one groupBy shuffle on the
-    * destination key — the Pregel cost model. Degrees are computed once.
-    * Rounds are a fixed constant, so total cost is O(iters · |E|) with no
-    * driver-side data movement at all. */
+    * truncates lineage so each round's plan does not embed the previous
+    * round's); each round is ONE equi-join of the edge list against the
+    * (small) rank table plus one groupBy shuffle on the destination key —
+    * the Pregel cost model. Degrees are computed once. Rounds are a fixed
+    * constant, so total cost is O(iters · |E|) with no driver-side data
+    * movement at all. */
   def pageRank(annots: DataFrame, iterations: Int = PageRankIters): DataFrame =
     pageRankFromPairs(Cooccurrence.pairCounts(
       Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")), iterations)

@@ -131,10 +131,17 @@ class DedupSpec extends SparkSpec {
     // md5-derived ids must never reintroduce one anywhere in the family
     val d = docs(base, base, "other words entirely unrelated zebra")
     for (df <- Seq(Dedup.minhashCandidates(d), Dedup.simhash(d),
-                   Dedup.rollingFingerprint(d), Dedup.ngramJaccard(d), Dedup.shingleSetsHashed(d))) {
+                   Dedup.rollingFingerprint(d), Dedup.ngramJaccard(d), Dedup.shingleSetsHashed(d),
+                   Dedup.clusters(d))) {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("SinglePartition"), s"single-partition exchange in:\n$plan")
     }
+    // the components rounds run on RDDs, outside executedPlan: the label
+    // table itself must stay spread over the session's shuffle partitions
+    // (a coalesce(1) or a driver-side collect would not show in the plan)
+    val labels = Dedup.connectedComponents(Dedup.ngramJaccard(d).select("doc_a", "doc_b"))
+    assert(labels.count() == 2)
+    assert(labels.rdd.getNumPartitions == spark.sessionState.conf.numShufflePartitions)
   }
 
   test("hashed (xxhash64) and default (md5) shingle paths find the same candidate docs") {

@@ -43,6 +43,16 @@ class SkewSpec extends SparkSpec {
       ("b", "c"), ("b", "d"), ("c", "d"), ("x", "d")))
   }
 
+  test("transitiveClosure raises when a chain is deeper than the round cap") {
+    // 25 child→parent edges need 24 growing rounds and a 25th that adds
+    // nothing; at the default cap of 20 the closure holds 315 of 325 rows
+    val chain = (1 to 25).map(i => (s"n$i", s"n${i - 1}")).toDF("child", "parent")
+    val e = intercept[IllegalStateException](
+      graft.operators.KnowledgeGraph.transitiveClosure(chain))
+    assert(e.getMessage.contains("maxIterations = 20"), e.getMessage)
+    assert(graft.operators.KnowledgeGraph.transitiveClosure(chain, maxIterations = 30).count() == 325)
+  }
+
   test("conll03 export tags dictionary tokens with B-<group>") {
     val docs = Seq((0L, "join table zzz", "en", "s", 14L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
